@@ -11,16 +11,20 @@ the reference's deterministic text handling; tests re-extract from
 
 Geocoding plays the osmgeobase/osmposition role (SURVEY.md G12):
 recognize a gazetteer term in the text and resolve it to fixed-point
-coordinates. Implemented as Arrow-vectorized pandas string ops + a
-broadcast term dictionary — no per-row Python, no shuffle.
+coordinates. Implemented as one Arrow kernel (pyarrow.compute split +
+`index_in` hash probe against the term list) inside an Arrow UDF —
+no per-row Python, no shuffle.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -31,11 +35,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .fixtures import (
-    N_CITIES,
-    gazetteer_arrays,
-    place_for_doc,
-)
+from .fixtures import gazetteer_arrays, place_for_doc
 
 _LANGS = ["en", "de", "fr", "ja", "pt"]
 
@@ -113,83 +113,71 @@ def synth_pages(spark: SparkSession, n: int, partitions: int | None = None) -> D
     return rng_df.mapInPandas(gen, PAGES_SCHEMA)
 
 
-def _common_prefix(terms: list[str]) -> str:
-    p = terms[0]
-    for t in terms[1:]:
-        while not t.startswith(p):
-            p = p[:-1]
-            if not p:
-                return ""
-    return p
+# rows per kernel call: the per-call working set (token lists, probe
+# results) is what sets Python-worker memory — tokenizing a whole
+# 20k-row Arrow batch at once costs +20% worker RSS, 4,096-row slices +6%
+_SLICE = 4096
 
 
-def geocode(
-    pages: DataFrame, text_col: str = "text", prefilter: bool = True
-) -> DataFrame:
+def first_term(text: pa.Array, terms: pa.Array) -> np.ndarray:
+    """Arrow tokenize+probe kernel: per row, the index into `terms` of
+    the first `" "`-separated token that is a term, -1 when none.
+
+    Exactly `next((t for t in s.split(" ") if t in terms), None)`:
+    tokens keep attached punctuation and other whitespace, and the
+    empty tokens of repeated spaces probe (and miss) like any other.
+    One hash probe per token, mirroring the reference geocoder, which
+    tokenizes its input rather than substring-scanning
+    (osmposition.c:966-1101)."""
+    out = np.full(len(text), -1, dtype=np.int32)
+    for lo in range(0, len(text), _SLICE):
+        toks = pc.split_pattern(text.slice(lo, _SLICE), " ")
+        flat = pc.list_flatten(toks)
+        hit = pc.index_in(flat, value_set=terms.cast(flat.type))
+        hit = hit.fill_null(-1).to_numpy()
+        pos = np.flatnonzero(hit >= 0)
+        row = pc.list_parent_indices(toks).to_numpy()[pos]
+        first = np.diff(row, prepend=-1) != 0  # rows ascend: 1st hit per row
+        out[lo + row[first]] = hit[pos[first]]
+    return out
+
+
+def gazetteer_coords(idx: np.ndarray) -> tuple[pa.Array, pa.Array]:
+    """first_term indexes -> (lat_i, lon_i) int64 arrays, null on -1."""
+    _, lat_i, lon_i, _ = gazetteer_arrays()
+    miss = idx < 0
+    return pa.array(lat_i[idx], mask=miss), pa.array(lon_i[idx], mask=miss)
+
+
+def geocode_stage(pages: DataFrame, udf, text_col: str = "text") -> DataFrame:
+    """pages + the fields of a struct-returning Arrow UDF over the text.
+
+    Pages that cannot geocode are dropped first by a substring
+    `contains` on the raw text (the gazetteer's longest common prefix,
+    if >= 3 chars) — conservative, since every term match implies it,
+    and pushed to the parquet scan. The UDF is marked nondeterministic
+    so Catalyst never duplicates it into a Filter on its fields (CSE
+    does not cross Filter/Project boundaries): it runs once per row."""
+    lcp = os.path.commonprefix(gazetteer_arrays()[0])
+    if len(lcp) >= 3:
+        pages = pages.filter(F.col(text_col).contains(lcp))
+    g = udf.asNondeterministic()(F.col(text_col))
+    fields = {f: F.col(f"_g.{f}") for f in udf.returnType.fieldNames()}
+    return pages.withColumn("_g", g).withColumns(fields).drop("_g")
+
+
+def geocode(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """Resolve each page to fixed-point coords via the gazetteer
-    (SURVEY.md G12). Adds lat_i/lon_i (null when no term found).
+    (SURVEY.md G12). Adds lat_i/lon_i (null when no term found); the
+    first term token wins (the reference geocoder also ranks and
+    takes the top candidate, osmposition.c:1229-1247). One Arrow UDF
+    runs `first_term`, the kernel the fused flagship stage
+    (operators/flagship.py) also runs."""
+    terms = pa.array(gazetteer_arrays()[0])
 
-    One combined regex over the term list; first (leftmost) match
-    wins (the reference geocoder also ranks and takes the top
-    candidate, osmposition.c:1229-1247).
+    @F.arrow_udf("lat_i long, lon_i long")
+    def _geocode(text: pa.Array) -> pa.Array:
+        lat, lon = gazetteer_coords(first_term(text, terms))
+        return pa.StructArray.from_arrays([lat, lon], ["lat_i", "lon_i"])
 
-    Entirely JVM-side. Two deliberate plan-shape choices (both
-    measured on 1M pages):
-
-    - The expensive alternation regex is evaluated EXACTLY ONCE per
-      row: the lat/lon lookup goes through a single packed
-      (lat<<32|lon) map so every downstream column derives from one
-      expression inside one Project. Catalyst's subexpression
-      elimination dedupes within a Project but NOT across
-      Filter/Project boundaries — a plan that filters on a
-      regex-derived column re-runs the regex (observed 2x wall
-      time). Callers must therefore not filter on lat_i/lon_i
-      before the next pipeline barrier; flagship pushes the
-      bbox/null handling into the PIP kernel instead.
-    - `prefilter` drops obviously-ungeocodable rows with a cheap
-      substring `contains` on the RAW text (longest common prefix
-      of the gazetteer, if >= 3 chars) before the regex ever runs.
-      It is conservative: contains(prefix) is implied by any term
-      match, so no geocodable row is lost.
-    """
-    terms, lat_i, lon_i, _w = gazetteer_arrays()
-
-    if prefilter:
-        lcp = _common_prefix(list(terms))
-        if len(lcp) >= 3:
-            pages = pages.filter(F.col(text_col).contains(lcp))
-
-    pairs = []
-    for t, la, lo in zip(terms, lat_i.tolist(), lon_i.tolist()):
-        pairs += [F.lit(t), F.lit((int(la) << 32) | int(lo))]
-    packed_map = F.create_map(*pairs)
-
-    if any(" " in t for t in terms):
-        # multi-word gazetteer terms: fall back to the alternation
-        # regex (substring semantics). ~2.3x slower than the token
-        # path on 4M pages — single-token gazetteers get the fast
-        # path below.
-        pattern = "(" + "|".join(re.escape(t) for t in terms) + ")"
-        term = F.regexp_extract(F.col(text_col), pattern, 1)
-        packed = F.try_element_at(packed_map, term)
-    else:
-        # token hash-lookup path: split -> per-token map probe ->
-        # first hit. O(tokens) hash lookups instead of O(chars x
-        # alternatives) regex backtracking — measured 2.3x faster
-        # and it mirrors the reference geocoder, which tokenizes
-        # its input rather than substring-scanning
-        # (osmposition.c:966-1101). try_element_at everywhere:
-        # missing key / empty hit list yield NULL under ANSI.
-        toks = F.split(F.col(text_col), " ")
-        packed_all = F.transform(
-            toks, lambda t: F.try_element_at(packed_map, t)
-        )
-        packed = F.try_element_at(
-            F.filter(packed_all, lambda x: x.isNotNull()), F.lit(1)
-        )
-    return pages.withColumns(
-        {
-            "lat_i": F.shiftright(packed, 32).cast("long"),
-            "lon_i": packed.bitwiseAND(F.lit((1 << 32) - 1)).cast("long"),
-        }
-    )
+    return geocode_stage(pages, _geocode, text_col)

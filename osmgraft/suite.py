@@ -4670,7 +4670,7 @@ def q36_geobase_build(spark, sf_dir):
 
 def q37_geocode_text(spark, sf_dir):
     """G12 geocode: synthesize the pages table (mapInPandas), run
-    the JVM-side regex geocoder over the EXTRACTED TEXT, and emit
+    the Arrow token-probe geocoder over the EXTRACTED TEXT, and emit
     resolved coordinates — checked against the planting rule, i.e.
     an end-to-end test of make_html -> extract_text -> geocode."""
     from .pages import geocode, synth_pages
@@ -8264,7 +8264,7 @@ est AS (
 SELECT e.a AS doc_id, p.v, e.num, e.den, e.n_neighbors
 FROM est e JOIN pv p ON p.doc_id = e.a
 """,
-        "q197_url_templates": """
+        "q197_url_templates": r"""
 WITH urls AS (
   SELECT 'https://host' || CAST(doc_id % 11 AS VARCHAR)
     || '.example.com/item/' || CAST(doc_id AS VARCHAR)
@@ -9002,7 +9002,7 @@ SELECT key AS event_type, n_days, sy,
   CAST(n_days * stt - st * st AS BIGINT) AS slope_den
 FROM sums
 """,
-        "q204_crawl_pipeline": """
+        "q204_crawl_pipeline": r"""
 WITH urls AS (
   SELECT 'https://host' || CAST(doc_id % 11 AS VARCHAR)
          || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url

@@ -8,6 +8,8 @@ needed, and broadcast (not shuffled) joins for small sides."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,19 +54,22 @@ def test_flagship_plan_shape(pages):
 
 
 def test_flagship_single_extraction(pages):
-    """The geocode term extraction appears in exactly one Project
-    operator — no Filter on derived columns re-runs it."""
+    """No JVM geocode survives in the flagship plan: tokenize, probe
+    and PIP all run in the one Python eval, whose only input is the
+    text column."""
     from osmgraft.operators.flagship import flagship_assign
 
     plan = _formatted(flagship_assign(pages))
-    # the packed-map lookup string appears once per derived column
-    # within ONE Project node and nowhere else (notably: not inside
-    # any Filter condition)
-    for line in plan.splitlines():
-        if line.startswith("Condition") and "split(" in line:
-            raise AssertionError(
-                f"geocode extraction leaked into a Filter: {line[:120]}"
-            )
+    for jvm_geocode in ("split(", "transform(", "map("):
+        assert jvm_geocode not in plan, jvm_geocode
+    args = [
+        line for line in plan.splitlines()
+        if line.startswith("Arguments") and "pythonUDF" in line
+    ]
+    assert len(args) == 1, args
+    udf_inputs = re.findall(r"\w+\(([^()]*)\)#\d+", args[0])
+    assert len(udf_inputs) == 1, args[0]
+    assert re.fullmatch(r"text#\d+", udf_inputs[0]), args[0]
 
 
 def test_bbox_filter_pushdown(spark):
