@@ -30,7 +30,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 # flagship pages-table size: 200 pages per document row of the SF
 PAGES_PER_DOC = int(os.environ.get("SPARK_GRAFT_PAGES_PER_DOC", "200"))
 

@@ -9,4 +9,6 @@ cluster scale. Not a port — the reference defines WHAT is computed
 is Catalyst + Tungsten.
 """
 
+from . import _pyworker  # noqa: F401  (zipimport cache backport)
+
 __version__ = "0.1.0"

@@ -25,16 +25,14 @@ matters downstream when grouping by cell — see tiles.py.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..geo.cells import DEFAULT_SHIFT, LAT_OFFSET, LON_OFFSET, _lon_bits
+from ..geo.fixedpoint import NIL
 from ..geo.pip import PolygonSet, assign_polygons, query_inside
 
 
@@ -71,24 +69,14 @@ def with_cell(
     )
 
 
-_ASSIGN_SCHEMA = StructType(
-    [
-        StructField("region", StringType()),
-        StructField("subregion", StringType()),
-        StructField("region_admin", IntegerType()),
-    ]
-)
-
 # OPT-IN ONLY (default 0 = disabled): polygon sets up to this many
 # total edges can be evaluated JVM-side as pure Catalyst expressions
-# (assign_regions fast path). MEASURED NEGATIVE RESULT on 4M pages:
-# the inlined edge-CASE chains blow up generated code (codegen
-# fallback) and, being deterministic, the region filter pushes down
-# and DUPLICATES the whole geocode+PIP chain into a scan Filter —
-# >10x slower than the Arrow kernel. The numpy kernel wins because
-# it is vectorized once per batch and its nondeterministic marking
-# blocks the duplicating pushdown. Kept for small-data uses and as
-# the equivalence reference (tests/test_assign_paths_equiv.py).
+# (assign_regions fast path). MEASURED NEGATIVE RESULT on
+# points_pip_tiles' 6-polygon / 29-edge set (4 cores, 2M points): the
+# Catalyst path runs 5.04 s/op (6.6 s/Mrow of CPU, all JVM) against
+# 2.36 s/op for the Arrow kernel; a higher-order-function-free
+# CASE-chain rewrite measured 5.2 s/op. Kept for small-data uses and
+# as the equivalence reference (tests/test_assign_paths_equiv.py).
 JVM_EDGE_LIMIT = 0
 
 
@@ -181,6 +169,67 @@ def _assign_columns_catalyst(
     return region, subregion, F.when(has, rmin.a).cast("int")
 
 
+def _bbox_prefilter(
+    df: DataFrame, polyset: PolygonSet, lat_col: str, lon_col: str,
+    keep_noregion: bool,
+) -> DataFrame:
+    """Drop points outside the polygon set's global bbox (a pure
+    Catalyst filter, pushed to the scan) unless no-region rows are
+    kept."""
+    if not len(polyset) or keep_noregion:
+        return df
+    gx1, gy1, gx2, gy2 = polyset.global_bbox
+    return df.filter(
+        bbox_contains(F.col(lon_col), F.col(lat_col), gx1, gy1, gx2, gy2)
+    )
+
+
+def _assign_stage(
+    df: DataFrame,
+    polyset: PolygonSet,
+    kernel,
+    lat_col: str,
+    lon_col: str,
+    keep_noregion: bool,
+) -> DataFrame:
+    """df + (region, subregion, region_admin) from ONE Arrow UDF.
+
+    `kernel(px, py) -> (region_idx, subregion_idx)` runs in the worker
+    on int64 coordinate arrays (-1 = no polygon); the UDF ships only
+    the two int32 indexes back, and Catalyst resolves names and admin
+    levels with `get` on literal arrays (null for -1). Null
+    coordinates (ungeocoded rows) become the NIL sentinel, outside
+    every polygon bbox, so callers need no Catalyst-side null filter
+    that would re-evaluate expensive upstream exprs (CSE does not
+    span Filter/Project boundaries)."""
+
+    @F.arrow_udf("r int, s int")
+    def _assign(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        r, s = kernel(
+            pc.fill_null(lon, NIL).to_numpy().astype(np.int64, copy=False),
+            pc.fill_null(lat, NIL).to_numpy().astype(np.int64, copy=False),
+        )
+        return pa.StructArray.from_arrays(
+            [pa.array(r, pa.int32()), pa.array(s, pa.int32())], ["r", "s"]
+        )
+
+    # deterministic in fact, but marked nondeterministic so Catalyst
+    # cannot inline/duplicate the ArrowEvalPython node when its
+    # result feeds both a filter and the output projection (observed
+    # double evaluation: 2x Arrow transfer + 2x PIP kernel)
+    a = _assign.asNondeterministic()(F.col(lat_col), F.col(lon_col))
+    names = F.lit(list(polyset.names)).cast("array<string>")
+    admins = F.lit(polyset.admin_levels.tolist()).cast("array<int>")
+    out = df.withColumn("_a", a).withColumns(
+        {
+            "region": F.get(names, F.col("_a.r")),
+            "subregion": F.get(names, F.col("_a.s")),
+            "region_admin": F.get(admins, F.col("_a.r")),
+        }
+    ).drop("_a")
+    return out if keep_noregion else out.filter(F.col("region").isNotNull())
+
+
 def assign_regions(
     df: DataFrame,
     polyset: PolygonSet,
@@ -195,12 +244,8 @@ def assign_regions(
     (differentially tested). The polygon index is broadcast; the
     point side never shuffles.
     """
-    if prefilter_bbox and len(polyset) and not keep_noregion:
-        gx1, gy1, gx2, gy2 = polyset.global_bbox
-        df = df.filter(
-            bbox_contains(F.col(lon_col), F.col(lat_col),
-                          gx1, gy1, gx2, gy2)
-        )
+    if prefilter_bbox:
+        df = _bbox_prefilter(df, polyset, lat_col, lon_col, keep_noregion)
 
     total_edges = sum(p.n_edges for p in polyset.polys)
     if 0 < total_edges <= JVM_EDGE_LIMIT:
@@ -221,50 +266,13 @@ def assign_regions(
             out = out.filter(F.col("region").isNotNull())
         return out
 
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(polyset)
-    admin_by_idx = polyset.admin_levels
+    bc = df.sparkSession.sparkContext.broadcast(polyset)
 
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def kernel(px, py):
+        return assign_polygons(px, py, bc.value)
 
-        ps = bc.value
-        # nulls (ungeocoded rows) -> NIL sentinel, outside every
-        # polygon bbox; lets callers skip a Catalyst-side null
-        # filter that would re-evaluate expensive upstream exprs
-        # (CSE does not span Filter/Project boundaries)
-        r, s = assign_polygons(
-            lon.fillna(2_000_000_000).to_numpy("int64"),
-            lat.fillna(2_000_000_000).to_numpy("int64"),
-            ps,
-        )
-        # fancy-index name lookup; trailing None catches idx == -1
-        names = np.array(list(ps.names) + [None], dtype=object)
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
-        )
-
-    # deterministic in fact, but marked nondeterministic so Catalyst
-    # cannot inline/duplicate the ArrowEvalPython node when its
-    # result feeds both a filter and the output projection (observed
-    # double evaluation: 2x Arrow transfer + 2x PIP kernel)
-    _assign = _assign.asNondeterministic()
-
-    out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
-    out = (
-        out.withColumn("region", F.col("_a.region"))
-        .withColumn("subregion", F.col("_a.subregion"))
-        .withColumn("region_admin", F.col("_a.region_admin"))
-        .drop("_a")
-    )
-    if not keep_noregion:
-        out = out.filter(F.col("region").isNotNull())
-    return out
+    return _assign_stage(df, polyset, kernel, lat_col, lon_col,
+                         keep_noregion)
 
 
 def assign_regions_cover(
@@ -294,57 +302,24 @@ def assign_regions_cover(
     """
     from ..geo.cover import DEFAULT_MAX_CELLS, build_cell_cover
 
-    import numpy as np
-
     cover = build_cell_cover(
         polyset, shift=shift,
         max_cells=max_cells or DEFAULT_MAX_CELLS,
     )
-    if len(polyset) and not keep_noregion:
-        gx1, gy1, gx2, gy2 = polyset.global_bbox
-        df = df.filter(
-            bbox_contains(F.col(lon_col), F.col(lat_col),
-                          gx1, gy1, gx2, gy2)
-        )
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cover)
-    admin_by_idx = polyset.admin_levels
+    df = _bbox_prefilter(df, polyset, lat_col, lon_col, keep_noregion)
+    bc = df.sparkSession.sparkContext.broadcast(cover)
 
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
+    def kernel(px, py):
         cov = bc.value
-        px = lon.fillna(2_000_000_000).to_numpy("int64")
-        py = lat.fillna(2_000_000_000).to_numpy("int64")
         r, s, needs = cov.classify(px, py)
         if needs.any():
-            re_, se_ = assign_polygons(px[needs], py[needs], cov.polyset)
-            r[needs] = re_
-            s[needs] = se_
-        names = np.array(
-            list(cov.polyset.names) + [None], dtype=object
-        )
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
-        )
+            r[needs], s[needs] = assign_polygons(
+                px[needs], py[needs], cov.polyset
+            )
+        return r, s
 
-    _assign = _assign.asNondeterministic()  # see assign_regions
-
-    out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
-    out = (
-        out.withColumn("region", F.col("_a.region"))
-        .withColumn("subregion", F.col("_a.subregion"))
-        .withColumn("region_admin", F.col("_a.region_admin"))
-        .drop("_a")
-    )
-    if not keep_noregion:
-        out = out.filter(F.col("region").isNotNull())
-    return out
+    return _assign_stage(df, polyset, kernel, lat_col, lon_col,
+                         keep_noregion)
 
 
 def assign_regions_rtree(
@@ -375,49 +350,15 @@ def assign_regions_rtree(
     """
     from ..geo.rtree import assign_polygons_rtree, build_polyset_rtree
 
-    if len(polyset) and not keep_noregion:
-        gx1, gy1, gx2, gy2 = polyset.global_bbox
-        df = df.filter(
-            bbox_contains(F.col(lon_col), F.col(lat_col),
-                          gx1, gy1, gx2, gy2)
-        )
+    df = _bbox_prefilter(df, polyset, lat_col, lon_col, keep_noregion)
     tree = build_polyset_rtree(polyset, cap=cap)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((polyset, tree))
-    admin_by_idx = polyset.admin_levels
+    bc = df.sparkSession.sparkContext.broadcast((polyset, tree))
 
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def kernel(px, py):
+        return assign_polygons_rtree(px, py, *bc.value)
 
-        ps, tr = bc.value
-        r, s = assign_polygons_rtree(
-            lon.fillna(2_000_000_000).to_numpy("int64"),
-            lat.fillna(2_000_000_000).to_numpy("int64"),
-            ps,
-            tr,
-        )
-        names = np.array(list(ps.names) + [None], dtype=object)
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
-        )
-
-    _assign = _assign.asNondeterministic()  # see assign_regions
-
-    out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
-    out = (
-        out.withColumn("region", F.col("_a.region"))
-        .withColumn("subregion", F.col("_a.subregion"))
-        .withColumn("region_admin", F.col("_a.region_admin"))
-        .drop("_a")
-    )
-    if not keep_noregion:
-        out = out.filter(F.col("region").isNotNull())
-    return out
+    return _assign_stage(df, polyset, kernel, lat_col, lon_col,
+                         keep_noregion)
 
 
 def filter_border(

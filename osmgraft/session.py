@@ -2,7 +2,9 @@
 
 Tuned for the target profile (BASELINE.json): huge scans, broadcast
 spatial joins, Arrow-batched pandas UDF kernels, AQE for skew.
-Defaults assume local[N] in the sandbox; on a real cluster the same
+Defaults fit the host: local[N] over the CPUs this process may run on
+and 40% of physical memory for the driver (SPARK_GRAFT_CPUS and
+SPARK_GRAFT_DRIVER_MEM override both); on a real cluster the same
 conf ships via spark-submit --py-files and only master/memory change.
 """
 
@@ -13,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """40% of the host's physical memory, in whole GB (at least 1):
+    the driver JVM is also the local executor, and the Python workers
+    and the OS need the rest."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f
+                  if ln.startswith("MemTotal:"))
+    return f"{max(1, kb * 2 // 5 >> 20)}g"
+
+
 def get_spark(
     app_name: str = "osmgraft",
     cores: int | None = None,
@@ -20,7 +32,8 @@ def get_spark(
     extra: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         # ~1 shuffle partition per core locally; a real cluster sets
         # this to 2-3x total cores (or relies on AQE coalescing)
@@ -35,7 +48,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # InferFiltersFromGenerate clones the generator's CHILD

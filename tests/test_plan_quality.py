@@ -44,10 +44,10 @@ def test_flagship_plan_shape(pages):
     assert "ReadSchema: struct<url:string,text:string>" in plan
     # the cheap prefilter reaches the parquet scan
     assert "StringContains(text,City)" in plan
-    # exactly ONE Python stage — the vectorized PIP kernel (the
-    # inlined-Catalyst PIP variant measured >10x slower: codegen
-    # blowup + deterministic filter pushdown duplicating the chain;
-    # see spatial.JVM_EDGE_LIMIT)
+    # exactly ONE Python stage — the fused geocode + PIP Arrow UDF
+    # (operators/flagship.py); the flagship never routes through
+    # assign_regions, so its opt-in Catalyst PIP path
+    # (spatial.JVM_EDGE_LIMIT) cannot apply here
     assert plan.count("ArrowEvalPython (") == 1
     # zero shuffles: broadcast polygons, partition-local points
     assert "Exchange" not in plan
